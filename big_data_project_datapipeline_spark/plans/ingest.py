@@ -9,6 +9,9 @@ raw_data.py:210-269,273-352) as ONE lazy plan:
       filter(day == target, minute == 0)     (F1, F2)
       upsert into history, new wins          (U1 + D1)
 
+The CLI job stops at F1/F2 (``hourly_grid``) and leaves the D1 upsert to
+``sinks.merge_into_partitioned``; ``daily_ingest`` is the whole plan (q37).
+
 Physical plan at scale: the three grid sources shuffle once on ``datetime``
 (AQE coalesces the tiny ones), prices joins via the bucketed as-of (one
 shuffle on a salted-enough integer bucket key), the 1-row generation mix is
@@ -68,6 +71,14 @@ def merge_all_sources(
     return merged.crossJoin(F.broadcast(mix_payload))
 
 
+def hourly_grid(
+    merged: DataFrame, target_date: dt.date, ts_col: str = "datetime"
+) -> DataFrame:
+    """F1/F2: the target day's on-the-hour rows (raw_data.py:306-316)."""
+    ts = F.col(ts_col)
+    return merged.filter((F.to_date(ts) == F.lit(target_date)) & (F.minute(ts) == 0))
+
+
 def daily_ingest(
     merged: DataFrame,
     history: DataFrame,
@@ -76,8 +87,5 @@ def daily_ingest(
 ) -> DataFrame:
     """Filter to the target day's hourly grid and upsert into history
     (reference raw_data.py:306-316,241-263). Returns the new history."""
-    day = (
-        merged.filter(F.to_date(F.col(ts_col)) == F.lit(target_date))  # F1
-        .filter(F.minute(F.col(ts_col)) == 0)  # F2: hourly grid
-    )
+    day = hourly_grid(merged, target_date, ts_col)
     return upsert_keep_last(history, day, keys=(ts_col,)).orderBy(ts_col)

@@ -23,30 +23,28 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_project_datapipeline_spark.operators.merge import upsert_keep_last
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Date-partitioned parquet sink with dynamic partition overwrite: an
-    idempotent daily job rewrites only the partitions present in ``df``."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer = df.write.mode(mode)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Date-partitioned parquet sink with dynamic partition overwrite (a
+    per-write option, never session conf): an idempotent daily job
+    rewrites only the partitions present in ``df``."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(*partition_cols).parquet(path)
+
+
+def _partition_in(partition_col: str, values: list) -> Column:
+    """Rows in the ``values`` partitions. isin() never matches NULL: a None
+    needs the IS NULL branch or the null partition's rows are lost (review fix)."""
+    cond = F.col(partition_col).isin([v for v in values if v is not None])
+    if None in values:
+        cond = cond | F.col(partition_col).isNull()
+    return cond
 
 
 def merge_into_partitioned(
@@ -54,22 +52,21 @@ def merge_into_partitioned(
     path: str,
     keys: list[str],
     partition_col: str,
-    spark: SparkSession | None = None,
 ) -> None:
     """Upsert ``new`` into the partitioned sink, new-wins per key (D1).
 
     Only partitions present in ``new`` are read back, merged, and
     rewritten — the reference's read-modify-write of the whole CSV
     (raw_data.py:246-263) shrunk to the touched dates. Emulates Delta
-    MERGE with plain parquet.
+    MERGE with plain parquet. Same-key rows within ``new`` keep one row,
+    on the first write too.
     """
     from pyspark.errors import AnalysisException
 
-    spark = spark or new.sparkSession
     try:
-        existing = spark.read.parquet(path)
+        existing = new.sparkSession.read.parquet(path)
     except AnalysisException:  # path not found — first write, nothing to merge
-        merged = new
+        existing_slice = new.limit(0)
     else:
         # Any error past this point (corrupt file, permission, schema
         # mismatch) must propagate: treating it as "first write" would
@@ -79,26 +76,17 @@ def merge_into_partitioned(
         touched = [
             r[0] for r in new.select(partition_col).distinct().collect()
         ]
-        # isin() never matches NULL: without the isNull branch, existing
-        # rows in the null partition are excluded from the merge while
-        # dynamic overwrite still rewrites __HIVE_DEFAULT_PARTITION__ —
-        # silent data loss (review fix, reproduced)
-        non_null = [t for t in touched if t is not None]
-        cond = F.col(partition_col).isin(non_null)
-        if any(t is None for t in touched):
-            cond = cond | F.col(partition_col).isNull()
-        existing_slice = existing.filter(cond).persist()
+        existing_slice = existing.filter(_partition_in(partition_col, touched)).persist()
         # materialize the slice BEFORE the overwrite: the merged plan
         # otherwise reads the very files the committer replaces (the
         # delete_where guard, applied here too)
         existing_slice.count()
-        merged = upsert_keep_last(existing_slice, new, keys=keys)
-        try:
-            write_partitioned(merged, path, [partition_col])
-        finally:
-            existing_slice.unpersist()
-        return
-    write_partitioned(merged, path, [partition_col])
+    try:
+        write_partitioned(
+            upsert_keep_last(existing_slice, new, keys=keys), path, [partition_col]
+        )
+    finally:
+        existing_slice.unpersist()
 
 
 def write_bucketed(
@@ -622,13 +610,7 @@ def delete_where(
     ]
     if not touched:
         return 0
-    # isin() never matches NULL — subject rows in the null partition
-    # would be silently skipped while reporting 0 (review fix)
-    non_null = [t for t in touched if t is not None]
-    cond = F.col(partition_col).isin(non_null)
-    if any(t is None for t in touched):
-        cond = cond | F.col(partition_col).isNull()
-    slice_ = existing.filter(cond).persist()
+    slice_ = existing.filter(_partition_in(partition_col, touched)).persist()
     try:
         # one pass for both counts; materializes the cache the rewrite
         # reads from (so the write never scans the files it replaces)

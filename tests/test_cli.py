@@ -98,6 +98,32 @@ def test_two_day_ingest_then_incremental_features(spark, tmp_path):
     assert metrics["rows_ingested"] == 2
 
 
+def test_reland_revised_partial_day(spark, tmp_path):
+    """Re-landing a stored day with fewer, revised hours: the revised
+    hours win, the missing hour is kept, other dates are not rewritten."""
+    import os
+
+    store = str(tmp_path / "raw")
+    _write_payloads(tmp_path / "d1", "2024-01-15", [5.0, 6.0, 7.0])
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 1, 15))
+    _write_payloads(tmp_path / "d2", "2024-01-16", [8.0, 9.0, 10.0])
+    run_ingest(spark, str(tmp_path / "d2"), store, dt.date(2024, 1, 16))
+
+    other = tmp_path / "raw" / "date=2024-01-16"
+    mtimes = {p: os.stat(p).st_mtime_ns for p in other.iterdir()}
+
+    _write_payloads(tmp_path / "d1r", "2024-01-15", [50.0, 60.0])
+    run_ingest(spark, str(tmp_path / "d1r"), store, dt.date(2024, 1, 15))
+
+    rows = spark.read.parquet(store).filter("date = '2024-01-15'").collect()
+    got = {r["datetime"].hour: r["temperature_C"] for r in rows}
+    assert len(rows) == 3
+    assert got == {0: 50.0, 1: 60.0, 2: 7.0}
+    assert {p: os.stat(p).st_mtime_ns for p in other.iterdir()} == mtimes
+    metrics = json.loads((tmp_path / "raw" / "_metrics" / "ingest.json").read_text())
+    assert metrics["rows_ingested"] == 2
+
+
 def test_cli_compact(spark, tmp_path):
     import glob
 

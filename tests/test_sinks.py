@@ -42,6 +42,14 @@ def test_merge_into_partitioned_upsert(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
+def test_merge_into_partitioned_first_write_keeps_last(spark, tmp_path):
+    # the first write to a missing store still reduces same-key rows to one
+    path = str(tmp_path / "hist")
+    day = _mk(spark, [(ts(1, 0), 1.0), (ts(1, 0), 2.0), (ts(1, 1), 3.0)])
+    sinks.merge_into_partitioned(day, path, keys=["datetime"], partition_col="date")
+    assert spark.read.parquet(path).count() == 2
+
+
 def test_bucketed_join_no_shuffle(spark, tmp_path):
     # managed tables land in ./spark-warehouse (gitignored); overwritten per run
     a = spark.range(1000).withColumnRenamed("id", "k").withColumn("va", F.col("k") * 2)

@@ -38,7 +38,6 @@ def _run_stream(spark, src, ckpt, sink_path):
             sink_path,
             keys=["event_id"],
             partition_col="date",
-            spark=spark,
         )
 
     q = (

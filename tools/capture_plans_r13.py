@@ -63,21 +63,28 @@ def main() -> None:
     get_spark(app_name="capture_plans_r13")
     qs = E.queries()
 
-    # 1a. de-fanned query: before = r12 always-on fan-out, after = r13
-    os.environ["SPARK_GRAFT_FANOUT"] = "all"
-    write("q204_column_profile_before.txt", qs["q204_column_profile"](
-        get_spark(), sf))
-    os.environ["SPARK_GRAFT_FANOUT"] = "auto"
-    write("q204_column_profile_after.txt", qs["q204_column_profile"](
-        get_spark(), sf))
+    prev_fanout = os.environ.get("SPARK_GRAFT_FANOUT")
+    try:
+        # 1a. de-fanned query: before = r12 always-on fan-out, after = r13
+        os.environ["SPARK_GRAFT_FANOUT"] = "all"
+        write("q204_column_profile_before.txt", qs["q204_column_profile"](
+            get_spark(), sf))
+        os.environ["SPARK_GRAFT_FANOUT"] = "auto"
+        write("q204_column_profile_after.txt", qs["q204_column_profile"](
+            get_spark(), sf))
 
-    # 1b. opted-in winner: RoundRobin kept in both policies
-    os.environ["SPARK_GRAFT_FANOUT"] = "all"
-    write("q215_logistic_irls_before.txt", qs["q215_logistic_irls"](
-        get_spark(), sf))
-    os.environ["SPARK_GRAFT_FANOUT"] = "auto"
-    write("q215_logistic_irls_after.txt", qs["q215_logistic_irls"](
-        get_spark(), sf))
+        # 1b. opted-in winner: RoundRobin kept in both policies
+        os.environ["SPARK_GRAFT_FANOUT"] = "all"
+        write("q215_logistic_irls_before.txt", qs["q215_logistic_irls"](
+            get_spark(), sf))
+        os.environ["SPARK_GRAFT_FANOUT"] = "auto"
+        write("q215_logistic_irls_after.txt", qs["q215_logistic_irls"](
+            get_spark(), sf))
+    finally:
+        if prev_fanout is None:
+            os.environ.pop("SPARK_GRAFT_FANOUT", None)
+        else:
+            os.environ["SPARK_GRAFT_FANOUT"] = prev_fanout
 
     # 2. q87's edge build, prep-shape A/B on one tree
     spark = get_spark()
