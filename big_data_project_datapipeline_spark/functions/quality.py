@@ -3450,6 +3450,7 @@ def logistic_irls(
             1e9
         )
 
+    snaps: list[DataFrame] = []
     for _ in range(n_iters):
         j = rows.join(F.broadcast(beta), gcols) if gcols else rows.crossJoin(
             F.broadcast(beta)
@@ -3501,7 +3502,8 @@ def logistic_irls(
         # (the pagerank per-sweep device): without it each broadcast
         # nests the whole prior chain as one deep tree and the
         # planner/codegen re-pays it per step — measured 23.0 s → 9.6 s
-        # at sf0.1 for 3 steps
+        # at sf0.1 for 3 steps. Snapshots ride on the result via
+        # attach_cache_release below, as in huber_irls.
         beta = mom.select(
             *gcols,
             "n",
@@ -3515,6 +3517,7 @@ def logistic_irls(
                 F.col("b2") + F.when(ok, d2).otherwise(F.lit(0.0)), 9
             ).alias("b2"),
         ).localCheckpoint(eager=False)
+        snaps.append(beta)
     jf = rows.join(F.broadcast(beta), gcols) if gcols else rows.crossJoin(
         F.broadcast(beta)
     )
@@ -3532,7 +3535,11 @@ def logistic_irls(
         # __y is exactly 0.0/1.0: the long cast is exact in any engine
         F.sum(F.col("__y").cast("long")).cast("long").alias("n_pos"),
     )
-    return out.select(
+    from big_data_project_datapipeline_spark.operators.caching import (
+        attach_cache_release,
+    )
+
+    res = out.select(
         *gcols,
         "n",
         "n_pos",
@@ -3543,6 +3550,7 @@ def logistic_irls(
             "avg_logloss"
         ),
     )
+    return attach_cache_release(res, (), snapshots=snaps)
 
 
 def _hist_median(

@@ -5,9 +5,10 @@ output (only new keys are processed), derive ~32 features, union back, and
 keep-first dedup as the idempotency guard. The scaler fits on the *delta
 batch only* — a deliberate reference semantic (SURVEY.md §7.4 trap 6).
 
-One lazy plan from raw scan to sink; the only materialization is the O(1)
-scaler-stats aggregate (12 scalars to the driver, then folded back in as
-literals — the Spark analog of broadcasting fitted parameters).
+One lazy plan from the materialized delta to sink; the other
+materialization is the O(1) scaler-stats aggregate (12 scalars to the
+driver, then folded back in as literals — the Spark analog of
+broadcasting fitted parameters).
 """
 
 from __future__ import annotations
@@ -71,8 +72,15 @@ def incremental_feature_run(
     Returns the new feature table. When the delta is empty the early-exit
     check (`isEmpty`, one cheap job — reference data_engineering.py:113-115)
     returns ``previous`` unchanged.
+
+    The delta is materialized once (``localCheckpoint``, as ``run_ingest``
+    does for the day): the emptiness check, the scaler fit and the write
+    then read its O(delta) blocks instead of re-running the anti-join over
+    the raw scan three times.
     """
-    delta = anti_join_delta(raw, previous.select(ts_col), keys=(ts_col,))
+    delta = anti_join_delta(
+        raw, previous.select(ts_col), keys=(ts_col,)
+    ).localCheckpoint()
     if delta.isEmpty():
         return previous
     engineered = engineer_features(delta, ts_col, scale_cols, scale_stats)

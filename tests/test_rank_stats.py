@@ -490,6 +490,41 @@ def test_logistic_irls_null_nan_feature_rows_drop(spark):
     assert r["n"] == 2 and r["n_pos"] == 1
 
 
+@pytest.mark.parametrize("fit", ["logistic_irls", "huber_irls"])
+def test_irls_step_snapshots_release_with_result(spark, fit):
+    """The per-step localCheckpoint snapshots ride on the result:
+    release_caches frees every one of them (blocking), instead of
+    leaving their blocks to ContextCleaner GC across runs."""
+    from big_data_project_datapipeline_spark.functions import quality
+    from big_data_project_datapipeline_spark.operators.caching import (
+        release_caches,
+    )
+
+    def ids():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList().iterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next()._1())
+        return out
+
+    df = spark.createDataFrame(
+        [("g", float(i), float(i % 3), float(i % 2)) for i in range(12)],
+        ["g", "x1", "x2", "y"],
+    )
+    before = ids()
+    if fit == "logistic_irls":
+        out = quality.logistic_irls(
+            df, F.col("y") == 1.0, "x1", "x2", ["g"], n_iters=3
+        )
+    else:
+        out = quality.huber_irls(df, "y", "x1", "x2", ["g"], n_reweights=2)
+    assert out.count() == 1
+    mine = ids() - before
+    assert len(mine) >= 3, mine  # one snapshot per step
+    release_caches(out)
+    assert not ids() & mine
+
+
 # ------------------------------------------------------------- ar(2) (q217)
 
 

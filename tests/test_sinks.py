@@ -504,3 +504,58 @@ def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert len(files) == 8, files
+
+
+def test_merge_into_partitioned_escaped_string_partitions(spark, tmp_path):
+    """The merge reads touched partitions by directory name, so each name
+    must be the one the writer produced (null -> default partition,
+    reserved characters percent-escaped). A mismatch would make an
+    existing partition look new and the overwrite would drop its rows."""
+    import os
+
+    path = str(tmp_path / "store")
+    values = [None, "a/b", "50%", "k=v", "a b", "x:y"]
+    schema = "k long, v string, p string"
+    rows = [(i, "old", p) for i, p in enumerate(values)]
+    rows += [(10 + i, "keep", p) for i, p in enumerate(values)]
+    sinks.merge_into_partitioned(
+        spark.createDataFrame(rows, schema), path, keys=["k"], partition_col="p"
+    )
+    assert sorted(n for n in os.listdir(path) if n.startswith("p=")) == sorted(
+        ["p=__HIVE_DEFAULT_PARTITION__", "p=a%2Fb", "p=50%25",
+         "p=k%3Dv", "p=a b", "p=x%3Ay"]
+    )
+
+    def mtimes(dirs):
+        return {
+            os.path.join(d, n): os.stat(os.path.join(path, d, n)).st_mtime_ns
+            for d in dirs
+            for n in os.listdir(os.path.join(path, d))
+        }
+
+    for touched, untouched in (
+        (values[:3], ["p=k%3Dv", "p=a b", "p=x%3Ay"]),
+        (values[3:], ["p=__HIVE_DEFAULT_PARTITION__", "p=a%2Fb", "p=50%25"]),
+    ):
+        before = mtimes(untouched)
+        new = [(values.index(p), "new", p) for p in touched]
+        sinks.merge_into_partitioned(
+            spark.createDataFrame(new, schema), path, keys=["k"], partition_col="p"
+        )
+        assert mtimes(untouched) == before
+
+    # a value no directory holds yet lands as a new partition
+    sinks.merge_into_partitioned(
+        spark.createDataFrame([(99, "fresh", "n[1]")], schema),
+        path, keys=["k"], partition_col="p",
+    )
+    assert os.path.isdir(os.path.join(path, "p=n%5B1%5D"))
+
+    got = sorted(
+        (r.k, r.v, r.p) for r in spark.read.parquet(path).collect()
+    )
+    # the re-merged rows won per key; the other rows of the touched
+    # partitions were kept
+    want = [(i, "new", p) for i, p in enumerate(values)]
+    want += [(10 + i, "keep", p) for i, p in enumerate(values)]
+    assert got == sorted(want + [(99, "fresh", "n[1]")])

@@ -164,3 +164,74 @@ def test_normalizers_accept_integer_json_values(spark):
                       "value_inc_vat": 25}]},
     )
     assert p.collect()[0]['retail_price_£_per_kWh'] == 0.25
+
+
+def _normalized_frames(spark, payload_value):
+    """One frame per normalizer, each carrying ``payload_value`` in its
+    numeric field(s)."""
+    return {
+        "parallel_arrays": lambda: normalize_parallel_arrays(
+            spark,
+            {"hourly": {"time": ["2024-01-01T00:00"], "temperature_2m": [payload_value]}},
+            "hourly",
+            {"temperature_2m": "temperature_C"},
+        ),
+        "carbon": lambda: normalize_carbon_records(
+            spark,
+            [{"data": [{"from": "2024-01-01T00:00Z",
+                        "intensity": {"actual": payload_value, "index": "low"}}]}],
+        ),
+        "generation_mix": lambda: normalize_generation_mix(
+            spark,
+            {"data": {"from": "2024-01-01T00:00Z",
+                      "generationmix": [{"fuel": "wind", "perc": payload_value}]}},
+        ),
+        "prices": lambda: normalize_prices(
+            spark,
+            {"results": [{"valid_from": "2024-01-01T00:00:00Z",
+                          "value_inc_vat": payload_value}]},
+        ),
+    }
+
+
+def test_normalizer_frames_have_no_python_rdd(spark):
+    # Payload frames are decoded in the JVM from Arrow: no pickled rows,
+    # no Python-worker stage per source.
+    for name, build in _normalized_frames(spark, 1.0).items():
+        lineage = build()._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, (name, lineage)
+
+
+def test_normalizers_reject_bool_and_non_numeric_values(spark):
+    import pytest as _pytest
+
+    for bad in (True, "12.5"):
+        for build in _normalized_frames(spark, bad).values():
+            with _pytest.raises(TypeError, match="can not accept"):
+                build()
+
+
+def test_string_fields_take_any_json_scalar_as_text(spark):
+    # a string field keeps the row path's leniency: the value's text
+    c = normalize_carbon_records(
+        spark,
+        [{"data": [{"from": "2024-01-01T00:00Z", "intensity": {"index": 3}}]}],
+    ).collect()
+    assert c[0]["carbon_index"] == "3"
+
+
+def test_empty_payloads_give_empty_frames_with_declared_schema(spark):
+    full = {k: build() for k, build in _normalized_frames(spark, 1.0).items()}
+    empty = {
+        "parallel_arrays": normalize_parallel_arrays(
+            spark, {}, "hourly", {"temperature_2m": "temperature_C"}
+        ),
+        "carbon": normalize_carbon_records(spark, [{"data": []}]),
+        "generation_mix": normalize_generation_mix(
+            spark, {"data": {"from": "2024-01-01T00:00Z", "generationmix": []}}
+        ),
+        "prices": normalize_prices(spark, {"results": []}),
+    }
+    for name, df in empty.items():
+        assert df.count() == 0, name
+        assert df.schema == full[name].schema, name
