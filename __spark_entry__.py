@@ -1989,6 +1989,9 @@ def q92_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checkable: the hourly pre-agg uses a decimal sum (order-
     independent across partitions) and the scaler fit is supplied as
     decimal-exact moments via the pipeline's fit/transform split."""
+    from big_data_project_datapipeline_spark.operators.caching import (
+        attach_cache_release,
+    )
     from big_data_project_datapipeline_spark.plans.features import (
         incremental_feature_run,
     )
@@ -2012,7 +2015,8 @@ def q92_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = incremental_feature_run(
         hourly, prev, scale_stats={"temperature_C": (mean, std)}
     )
-    return out.select(
+    # upstream: keeps the run's delta snapshot alive with the selection
+    sel = out.select(
         "datetime",
         "temperature_C",
         F.col("hour").cast("int").alias("hour"),
@@ -2031,6 +2035,7 @@ def q92_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cooling_demand",
         F.round("scaled_temperature_C", 6).alias("scaled_temperature_C"),
     )
+    return attach_cache_release(sel, (), upstream=(out,))
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,10 @@ from big_data_project_datapipeline_spark.functions.temporal import (
     add_cyclical_features,
     add_temporal_features,
 )
+from big_data_project_datapipeline_spark.operators.caching import (
+    attach_cache_release,
+    release_local_checkpoint,
+)
 from big_data_project_datapipeline_spark.operators.incremental import anti_join_delta
 from big_data_project_datapipeline_spark.operators.merge import upsert_keep_first
 from big_data_project_datapipeline_spark.operators.scale import zscore_scale
@@ -76,12 +80,15 @@ def incremental_feature_run(
     The delta is materialized once (``localCheckpoint``, as ``run_ingest``
     does for the day): the emptiness check, the scaler fit and the write
     then read its O(delta) blocks instead of re-running the anti-join over
-    the raw scan three times.
+    the raw scan three times. Its blocks are freed at once when the delta
+    is empty, and otherwise ride on the result (``attach_cache_release``).
     """
     delta = anti_join_delta(
         raw, previous.select(ts_col), keys=(ts_col,)
     ).localCheckpoint()
     if delta.isEmpty():
+        release_local_checkpoint(delta)
         return previous
     engineered = engineer_features(delta, ts_col, scale_cols, scale_stats)
-    return upsert_keep_first(previous, engineered, keys=(ts_col,)).orderBy(ts_col)
+    result = upsert_keep_first(previous, engineered, keys=(ts_col,)).orderBy(ts_col)
+    return attach_cache_release(result, (), snapshots=[delta])

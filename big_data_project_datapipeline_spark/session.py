@@ -102,20 +102,17 @@ def get_spark(
                 "SPARK_GRAFT_OPEN_COST_BYTES", str(4 * 1024 * 1024)
             ),
         )
-    )
-    if not master:
         # Driver-side partition listing. A scan of more than `threshold`
         # (default 32) directories lists them in a "Listing leaf files"
-        # Spark job; on local[N] that job runs on the driver's own
-        # threads, so it only adds scheduling. Measured on local[4]
-        # (4-core x86 host, local disk): a read of a 60-partition store
-        # took 2 jobs and 0.50-1.35 s with the listing job, 1 job
-        # (schema inference) and 0.12-0.21 s listed on the driver; of a
-        # 2000-partition store 8.8-10.0 s against 0.39-0.50 s. A
-        # session given an explicit master keeps Spark's default.
-        builder = builder.config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold", "10000"
-        )
+        # Spark job. On local[N], which every get_spark caller in this
+        # repository runs, that job runs on the driver's own threads and
+        # only adds scheduling.
+        # Measured on local[4] (4-core x86 host, local disk): a read of a
+        # 60-partition store took 2 jobs and 0.50-1.35 s with the listing
+        # job, 1 job (schema inference) and 0.12-0.21 s listed on the
+        # driver; of a 2000-partition store 8.8-10.0 s against 0.39-0.50 s.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -47,31 +47,6 @@ def _partition_in(partition_col: str, values: list) -> Column:
     return cond
 
 
-def _existing_partition_dirs(
-    spark: SparkSession, path: str, partition_col: str, values: list
-) -> list[str]:
-    """The ``partition_col=value`` directories of ``path`` that exist.
-
-    Named by the writer's own ``ExternalCatalogUtils.getPartitionPathString``
-    (``None`` -> ``__HIVE_DEFAULT_PARTITION__``, ``a/b`` -> ``a%2Fb``): a
-    name the writer would not produce makes an existing partition look
-    new, and the dynamic overwrite then replaces it with the new rows
-    only. ``values`` must be the values cast to string, as the writer
-    formats them. Existence goes through Hadoop ``FileSystem``, so any
-    store the writer supports works."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    names = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    root = Path(path)
-    fs = root.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
-    # None and "" share the default partition: one directory, read once
-    dirs = dict.fromkeys(
-        Path(root, names.getPartitionPathString(partition_col, v)).toString()
-        for v in values
-    )
-    return [d for d in dirs if fs.exists(Path(d))]
-
-
 def merge_into_partitioned(
     new: DataFrame,
     path: str,
@@ -80,40 +55,38 @@ def merge_into_partitioned(
 ) -> None:
     """Upsert ``new`` into the partitioned sink, new-wins per key (D1).
 
-    Only the partition directories ``new`` touches are read back, merged,
-    and rewritten — the reference's read-modify-write of the whole CSV
-    (raw_data.py:246-263) shrunk to the touched dates. The read lists
-    those directories alone (``basePath`` keeps the partition column), so
-    a daily merge is O(day), never a file index over the whole history.
-    Emulates Delta MERGE with plain parquet. A day with no existing
-    directory (a new date, or a missing store) merges against nothing,
-    and same-key rows within ``new`` still keep one row.
+    Only partitions present in ``new`` are read back, merged, and
+    rewritten — the reference's read-modify-write of the whole CSV
+    (raw_data.py:246-263) shrunk to the touched dates. Emulates Delta
+    MERGE with plain parquet. Same-key rows within ``new`` keep one row,
+    on the first write too.
     """
-    spark = new.sparkSession
-    # collect-ok: O(distinct partition values) manifest
-    touched = [
-        r[0]
-        for r in new.select(F.col(partition_col).cast("string")).distinct().collect()
-    ]
-    dirs = _existing_partition_dirs(spark, path, partition_col, touched)
-    if dirs:
-        # Any read error (corrupt file, permission, schema mismatch) must
-        # propagate: treating it as "first write" would dynamic-overwrite
-        # touched partitions with only the new rows and silently drop the
-        # existing rows that should have been merged.
-        existing = spark.read.option("basePath", path).parquet(*dirs).persist()
+    from pyspark.errors import AnalysisException
+
+    try:
+        existing = new.sparkSession.read.parquet(path)
+    except AnalysisException:  # path not found — first write, nothing to merge
+        existing_slice = new.limit(0)
+    else:
+        # Any error past this point (corrupt file, permission, schema
+        # mismatch) must propagate: treating it as "first write" would
+        # dynamic-overwrite touched partitions with only the new rows and
+        # silently drop the existing rows that should have been merged.
+        # collect-ok: O(distinct partition values) manifest
+        touched = [
+            r[0] for r in new.select(partition_col).distinct().collect()
+        ]
+        existing_slice = existing.filter(_partition_in(partition_col, touched)).persist()
         # materialize the slice BEFORE the overwrite: the merged plan
         # otherwise reads the very files the committer replaces (the
         # delete_where guard, applied here too)
-        existing.count()
-    else:
-        existing = new.limit(0)
+        existing_slice.count()
     try:
         write_partitioned(
-            upsert_keep_last(existing, new, keys=keys), path, [partition_col]
+            upsert_keep_last(existing_slice, new, keys=keys), path, [partition_col]
         )
     finally:
-        existing.unpersist()
+        existing_slice.unpersist()
 
 
 def write_bucketed(

@@ -28,6 +28,7 @@ are identical.
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,16 +47,18 @@ def _checked(value: Any, dtype: T.DataType, name: str) -> Any:
     Mirrors the row verifier it replaces, which Arrow alone does not:
     Arrow stores ``True`` as 1.0 in a double column and raises
     ``ArrowInvalid`` on a string there. JSON integers coerce to float
-    (real APIs emit 55, not 55.0); a string field takes any value as its
-    text, as before (a bad timestamp then parses to null); a missing
-    struct key reads as null, extra keys are ignored."""
+    (real APIs emit 55, not 55.0); a string field takes any other value
+    as its JSON text (``3`` -> "3", ``True`` -> "true", ``1e20`` ->
+    "1e+20"; the row path wrote Java's "1.0E20" for that float), and a
+    bad timestamp then parses to null; a missing struct key reads as
+    null, extra keys are ignored."""
     if value is None:
         return None
     if isinstance(dtype, T.DoubleType):
         if isinstance(value, (int, float)) and not isinstance(value, bool):
             return float(value)
     elif isinstance(dtype, T.StringType):
-        return str(value)
+        return value if isinstance(value, str) else json.dumps(value)
     elif isinstance(dtype, T.StructType) and isinstance(value, dict):
         return {
             f.name: _checked(value.get(f.name), f.dataType, f"{name}.{f.name}")

@@ -194,67 +194,50 @@ def test_cli_delete(spark, tmp_path):
     assert spark.read.parquet(path).count() == 8
 
 
-def test_daily_jobs_list_partitions_on_the_driver(tmp_path):
-    """On a session get_spark builds with its own local master, a day's
-    ingest + features over a 40-partition store starts no "Listing leaf
-    files" Spark job: the merge reads only the touched directory and
-    the full-store scan is listed on the driver. Runs in its own
-    subprocess JVM: the suite's shared session has an explicit master."""
-    import os
-    import subprocess
-    import sys
+def test_daily_jobs_list_partitions_on_the_driver(spark, tmp_path):
+    """A day's ingest + features over a 40-partition store starts no
+    "Listing leaf files" Spark job: get_spark lists partitions on the
+    driver."""
+    from pyspark.sql import functions as F
+
+    from big_data_project_datapipeline_spark.sinks import write_partitioned
 
     _write_payloads(tmp_path / "d0", "2024-01-01", [5.0, 6.0, 7.0])
     _write_payloads(tmp_path / "d1", "2024-03-01", [8.0, 9.0])
-    script = r"""
-import datetime as dt
-import sys
+    store, out = str(tmp_path / "raw"), str(tmp_path / "features")
+    run_ingest(spark, str(tmp_path / "d0"), store, dt.date(2024, 1, 1))
+    # 39 more date partitions: the first day shifted by 1..39 days
+    day = spark.read.parquet(store).drop("date")
+    shifted = day.crossJoin(spark.range(1, 40)).withColumn(
+        "datetime", F.col("datetime") + F.make_dt_interval(F.col("id"))
+    ).drop("id").withColumn("date", F.to_date("datetime"))
+    write_partitioned(shifted, store, ["date"])
 
-from pyspark.sql import functions as F
+    status = spark.sparkContext._jsc.sc().statusStore()
+    seen = {job_id for job_id, _ in _jobs(status)}
+    run_ingest(spark, str(tmp_path / "d1"), store, dt.date(2024, 3, 1))
+    run_features(spark, store, out)
+    listing = [
+        desc
+        for job_id, desc in _jobs(status)
+        if job_id not in seen and desc.startswith("Listing leaf files")
+    ]
+    assert not listing, listing
 
-from big_data_project_datapipeline_spark.__main__ import run_features, run_ingest
-from big_data_project_datapipeline_spark.session import get_spark
-from big_data_project_datapipeline_spark.sinks import write_partitioned
+    raw = {r[0] for r in spark.read.parquet(store).select("datetime").collect()}
+    feat = {
+        r[0]
+        for r in spark.read.parquet(out + "/features.parquet")
+        .select("datetime")
+        .collect()
+    }
+    assert len(raw) == 3 * 40 + 2 and feat == raw
 
-root = sys.argv[1]
-store, out = root + "/raw", root + "/features"
-spark = get_spark(app_name="listing-probe")
-run_ingest(spark, root + "/d0", store, dt.date(2024, 1, 1))
-# 39 more date partitions: the first day shifted by 1..39 days
-day = spark.read.parquet(store).drop("date")
-shifted = day.crossJoin(spark.range(1, 40)).withColumn(
-    "datetime", F.col("datetime") + F.make_dt_interval(F.col("id"))
-).drop("id").withColumn("date", F.to_date("datetime"))
-write_partitioned(shifted, store, ["date"])
 
-status = spark.sparkContext._jsc.sc().statusStore()
-mark = status.jobsList(None).size()
-run_ingest(spark, root + "/d1", store, dt.date(2024, 3, 1))
-run_features(spark, store, out)
-jobs = status.jobsList(None).iterator()
-descs = []
-while jobs.hasNext():
-    job = jobs.next()
-    if job.jobId() >= mark:
-        d = job.description()
-        descs.append(d.get() if d.isDefined() else job.name())
-listing = [d for d in descs if d.startswith("Listing leaf files")]
-assert not listing, listing
-raw = {r[0] for r in spark.read.parquet(store).select("datetime").collect()}
-feat = {r[0] for r in spark.read.parquet(out + "/features.parquet").select("datetime").collect()}
-assert len(raw) == 3 * 40 + 2 and feat == raw, (len(raw), len(feat))
-print("NO LISTING JOBS", len(descs))
-"""
-    env = dict(os.environ)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
-    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
-    proc = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "NO LISTING JOBS" in proc.stdout
+def _jobs(status):
+    """(job id, description) of every job the status store holds."""
+    it = status.jobsList(None).iterator()
+    while it.hasNext():
+        job = it.next()
+        desc = job.description()
+        yield job.jobId(), desc.get() if desc.isDefined() else job.name()

@@ -118,3 +118,35 @@ def test_anti_join_delta_null_keys_do_not_reaccumulate(spark):
     # pandas-isin semantics: the null key already in the sink matches,
     # so only the genuinely new key survives
     assert [(r.k, r.v) for r in out] == [(2, "c")]
+
+
+def test_incremental_feature_run_releases_its_delta_snapshot(spark):
+    """The materialized delta is freed at once when it is empty, and
+    otherwise rides on the result: release_caches frees it (blocking)
+    instead of leaving its blocks to ContextCleaner GC."""
+    from big_data_project_datapipeline_spark.operators.caching import (
+        release_caches,
+    )
+
+    def ids():
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList().iterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next()._1())
+        return out
+
+    raw = spark.createDataFrame(
+        [(ts(h), float(h)) for h in range(4)], "datetime timestamp, temperature_C double"
+    )
+    before = ids()
+    first = incremental_feature_run(raw, raw.limit(0).select("datetime"))
+    assert first.count() == 4
+    mine = ids() - before
+    assert mine  # the delta snapshot
+    release_caches(first)
+    assert not ids() & mine
+
+    previous = spark.createDataFrame([(ts(h),) for h in range(4)], "datetime timestamp")
+    before = ids()
+    assert incremental_feature_run(raw, previous) is previous
+    assert ids() == before

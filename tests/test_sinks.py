@@ -507,36 +507,36 @@ def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
 
 
 def test_merge_into_partitioned_escaped_string_partitions(spark, tmp_path):
-    """The merge reads touched partitions by directory name, so each name
-    must be the one the writer produced (null -> default partition,
-    reserved characters percent-escaped). A mismatch would make an
-    existing partition look new and the overwrite would drop its rows."""
+    """String partition values the writer escapes (null -> default
+    partition, reserved characters percent-escaped) or that look numeric
+    ("01") must read back as the same partition: otherwise an existing
+    partition looks new, or its rows land under another value, and the
+    overwrite drops them. Re-merged keys keep the last row, untouched
+    partitions keep their files, and a new value lands as a new
+    partition."""
     import os
 
     path = str(tmp_path / "store")
-    values = [None, "a/b", "50%", "k=v", "a b", "x:y"]
+    values = [None, "a/b", "50%", "k=v", "a b", "x:y", "01", "eu"]
+    dirs = ["p=__HIVE_DEFAULT_PARTITION__", "p=a%2Fb", "p=50%25",
+            "p=k%3Dv", "p=a b", "p=x%3Ay", "p=01", "p=eu"]
     schema = "k long, v string, p string"
     rows = [(i, "old", p) for i, p in enumerate(values)]
     rows += [(10 + i, "keep", p) for i, p in enumerate(values)]
     sinks.merge_into_partitioned(
         spark.createDataFrame(rows, schema), path, keys=["k"], partition_col="p"
     )
-    assert sorted(n for n in os.listdir(path) if n.startswith("p=")) == sorted(
-        ["p=__HIVE_DEFAULT_PARTITION__", "p=a%2Fb", "p=50%25",
-         "p=k%3Dv", "p=a b", "p=x%3Ay"]
-    )
+    assert sorted(n for n in os.listdir(path) if n.startswith("p=")) == sorted(dirs)
 
-    def mtimes(dirs):
+    def mtimes(ds):
         return {
             os.path.join(d, n): os.stat(os.path.join(path, d, n)).st_mtime_ns
-            for d in dirs
+            for d in ds
             for n in os.listdir(os.path.join(path, d))
         }
 
-    for touched, untouched in (
-        (values[:3], ["p=k%3Dv", "p=a b", "p=x%3Ay"]),
-        (values[3:], ["p=__HIVE_DEFAULT_PARTITION__", "p=a%2Fb", "p=50%25"]),
-    ):
+    for touched in (values[:3], values[3:6], ["01"], ["eu"]):
+        untouched = [d for v, d in zip(values, dirs) if v not in touched]
         before = mtimes(untouched)
         new = [(values.index(p), "new", p) for p in touched]
         sinks.merge_into_partitioned(

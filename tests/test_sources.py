@@ -212,12 +212,15 @@ def test_normalizers_reject_bool_and_non_numeric_values(spark):
 
 
 def test_string_fields_take_any_json_scalar_as_text(spark):
-    # a string field keeps the row path's leniency: the value's text
+    # a string field keeps the row path's leniency: the value's JSON text
     c = normalize_carbon_records(
         spark,
-        [{"data": [{"from": "2024-01-01T00:00Z", "intensity": {"index": 3}}]}],
+        [
+            {"data": [{"from": "2024-01-01T00:00Z", "intensity": {"index": 3}}]},
+            {"data": [{"from": "2024-01-01T00:30Z", "intensity": {"index": True}}]},
+        ],
     ).collect()
-    assert c[0]["carbon_index"] == "3"
+    assert sorted(r["carbon_index"] for r in c) == ["3", "true"]
 
 
 def test_empty_payloads_give_empty_frames_with_declared_schema(spark):
